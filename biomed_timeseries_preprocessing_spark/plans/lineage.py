@@ -38,53 +38,27 @@ def bucket_of(conv_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_buckets)).cast("int")
 
 
-def frame_checksum(df: DataFrame, cols: list[str]) -> int:
-    """Deterministic order-independent checksum: wrap-around sum of
-    xxhash64 over the given columns (same value on any partitioning)."""
-    row = df.select(
-        F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")).alias("c")
-    ).collect()[0]
-    # fold the exact decimal sum back into int64 range (ANSI-safe)
-    return int(row["c"] or 0) % (1 << 63)
-
-
-def frame_audit(
-    df: DataFrame, checksum_cols: list[str], extent_col: str
-) -> tuple[int, object, object, int]:
-    """(row count, min(extent_col), max(extent_col), frame_checksum) in
-    ONE Spark action. The per-tier lineage audit used to be three
-    separate actions (count, extent collect, checksum collect); each
-    action is a full pass plus a driver round-trip — pure Amdahl serial
-    in the per-bucket commit loop, 3× worse than it needs to be at any
-    cluster size."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.min(extent_col).alias("lo"),
-        F.max(extent_col).alias("hi"),
-        F.sum(
-            F.xxhash64(*[F.col(c) for c in checksum_cols]).cast("decimal(38,0)")
-        ).alias("c"),
-    ).collect()[0]
-    return int(row["n"]), row["lo"], row["hi"], int(row["c"] or 0) % (1 << 63)
-
-
 def attach_audit(
     df: DataFrame, checksum_cols: list[str], extent_col: str
 ) -> tuple[DataFrame, Observation]:
     """Piggyback the lineage audit on the frame's NEXT action instead of
     running a separate pass: returns ``(df.observe(...), observation)``.
-    ``frame_audit`` (above) fused three actions into one; this removes
-    the one — Spark's CollectMetrics node computes the same four
-    aggregates on the rows as they stream through whatever job
-    materializes the frame (in rollup_job: the tier's data-file write),
-    so per tier there is exactly ONE job. Read the result with
-    ``read_audit`` AFTER an action has run on the returned frame."""
+    Spark's CollectMetrics node computes the row count, the extent
+    (min/max of ``extent_col``, a timestamp) and the order-independent
+    checksum (wrap-around sum of xxhash64 over ``checksum_cols``) on the
+    rows as they stream through whatever job materializes the frame (in
+    rollup_job: the tier's data-file write), so per tier there is
+    exactly ONE job and no separate audit action. Read the result with
+    ``read_audit`` / ``audit_bounds`` AFTER an action has run on the
+    returned frame."""
     obs = Observation()
     audited = df.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.min(extent_col).alias("lo"),
         F.max(extent_col).alias("hi"),
+        F.unix_micros(F.min(extent_col)).alias("lo_us"),
+        F.unix_micros(F.max(extent_col)).alias("hi_us"),
         F.sum(
             F.xxhash64(*[F.col(c) for c in checksum_cols]).cast("decimal(38,0)")
         ).alias("c"),
@@ -97,6 +71,13 @@ def read_audit(obs: Observation) -> tuple[int, object, object, int]:
     observation; blocks until the frame's first action completes."""
     m = obs.get
     return int(m["n"]), m["lo"], m["hi"], int(m["c"] or 0) % (1 << 63)
+
+
+def audit_bounds(obs: Observation) -> tuple[int | None, int | None]:
+    """The ``attach_audit`` extent as epoch microseconds (Spark's
+    ``unix_micros``): the catalog's manifest ``lower``/``upper``."""
+    m = obs.get
+    return m["lo_us"], m["hi_us"]
 
 
 @dataclass

@@ -12,16 +12,26 @@ this sandbox has no Iceberg jar and no network (SURVEY §7.0), so
 - each table is a directory of immutable parquet data files plus
   ``metadata/snap-<n>.json`` manifests listing the files visible in that
   snapshot (≈ Iceberg manifest list);
+- a manifest entry is ``{"path", "partition"}`` and may also carry
+  ``"lower"``/``"upper"``: the epoch-microsecond range of the file's
+  ``bucket_start`` column (Iceberg's per-file ``lower_bounds`` /
+  ``upper_bounds``). Bounds are exact or wider, never tighter than the
+  data; writers compute them with Spark's ``unix_micros`` (see
+  ``with_bounds``). An entry without them is treated as unbounded;
 - a commit writes the new data files, writes the next snapshot JSON, and
   atomically renames it onto ``metadata/current.json`` (os.replace) —
   readers see the old or the new snapshot, never a partial write;
 - ``overwrite_partitions`` gives Iceberg's dynamic-partition-overwrite:
   the new snapshot drops prior files belonging to the replaced partition
-  keys (this is what retention expiry and resume re-commits use);
+  keys (this is what resume re-commits use);
+- ``replace_files`` gives Iceberg's ``RewriteFiles``: one snapshot that
+  drops exactly the named files and adds their replacements, refused
+  with :class:`CommitConflictError` if a named file is no longer
+  current (this is what retention's rewrite uses);
 - ``expire_snapshots`` prunes history like Iceberg's
   ``expire_snapshots`` procedure.
 
-Engine code only touches the 4-method surface, so swapping in the real
+Engine code only touches this small surface, so swapping in the real
 Iceberg catalog is a constructor change, not a rewrite.
 """
 
@@ -30,6 +40,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -40,6 +51,17 @@ try:  # POSIX cross-process advisory lock (this sandbox / any Linux box)
     import fcntl
 except ImportError:  # pragma: no cover - non-POSIX
     fcntl = None
+
+
+def with_bounds(entries: list[dict], lower: int | None, upper: int | None) -> list[dict]:
+    """Stamp manifest entries with a ``bucket_start`` range in epoch
+    microseconds (``unix_micros`` of the observed min/max). A range
+    observed over a whole write is wider than each file's own, which the
+    manifest contract allows. ``None`` (an empty write) leaves the
+    entries unbounded."""
+    if lower is None or upper is None:
+        return entries
+    return [{**e, "lower": int(lower), "upper": int(upper)} for e in entries]
 
 
 class CommitConflictError(RuntimeError):
@@ -254,6 +276,36 @@ class LocalSnapshotCatalog:
             ]
             return self._commit(table, keep + new_files, "overwrite", cur)["snapshot_id"]
 
+    def replace_files(self, table: str, remove: list[str], add: list[dict]) -> int:
+        """Metadata-only rewrite commit: one snapshot that drops exactly
+        the data files whose paths are in ``remove`` and adds the ``add``
+        entries. Raises :class:`CommitConflictError` if any file to remove
+        is no longer in the current snapshot (a concurrent commit
+        replaced it), so a rewrite never resurrects or duplicates rows."""
+        gone = set(remove)
+        with self._commit_mutex(table):
+            cur = self._current(table)
+            files = cur["files"] if cur else []
+            missing = gone - {f["path"] for f in files}
+            if missing:
+                raise CommitConflictError(
+                    f"{table}: {len(missing)} file(s) to replace are no longer "
+                    f"current (e.g. {sorted(missing)[0]}) — rewrite rejected"
+                )
+            keep = [f for f in files if f["path"] not in gone]
+            return self._commit(table, keep + add, "replace", cur)["snapshot_id"]
+
+    def discard_data_files(self, table: str, entries: list[dict]) -> None:
+        """Delete the write directories (``data/<uuid>``) of uncommitted
+        data files, e.g. a rewrite that turned out to change nothing.
+        Refuses files the current snapshot references."""
+        live = {f["path"] for f in self.current_files(table)}
+        if live & {e["path"] for e in entries}:
+            raise ValueError(f"{table}: refusing to discard committed data files")
+        data = os.path.join(self._tdir(table), "data")
+        for top in {os.path.relpath(e["path"], data).split(os.sep)[0] for e in entries}:
+            shutil.rmtree(os.path.join(data, top), ignore_errors=True)
+
     def overwrite(self, table: str, df: DataFrame) -> int:
         files = self._write_data(table, df, None)  # lock-free
         with self._commit_mutex(table):
@@ -273,6 +325,11 @@ class LocalSnapshotCatalog:
                 return 0  # nothing matched — skip the no-op snapshot
             self._commit(table, files, "delete", cur)
             return len(cur["files"]) - len(files)
+
+    def current_files(self, table: str) -> list[dict]:
+        """Manifest entries of the current snapshot ([] if none)."""
+        cur = self._current(table)
+        return cur["files"] if cur else []
 
     def read(self, spark: SparkSession, table: str, snapshot_id: int | None = None) -> DataFrame:
         if snapshot_id is None:
@@ -318,7 +375,7 @@ class LocalSnapshotCatalog:
 
 def get_catalog(warehouse: str):
     """Catalog factory: Iceberg when its runtime is importable/configured,
-    the local snapshot catalog otherwise (same 4-method surface)."""
+    the local snapshot catalog otherwise (same surface)."""
     try:  # pragma: no cover - Iceberg jar not present in this sandbox
         import importlib
 

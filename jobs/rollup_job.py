@@ -58,12 +58,16 @@ from biomed_timeseries_preprocessing_spark.operators.rollup import (  # noqa: E4
 from biomed_timeseries_preprocessing_spark.plans.lineage import (  # noqa: E402
     LineageLog,
     attach_audit,
+    audit_bounds,
     bucket_of,
     pending_buckets,
     read_audit,
 )
 from biomed_timeseries_preprocessing_spark.session import engine_cores, get_spark  # noqa: E402
-from biomed_timeseries_preprocessing_spark.sources.catalog import get_catalog  # noqa: E402
+from biomed_timeseries_preprocessing_spark.sources.catalog import (  # noqa: E402
+    get_catalog,
+    with_bounds,
+)
 from biomed_timeseries_preprocessing_spark.sources.ingest import (  # noqa: E402
     text_equality_violations,
 )
@@ -205,10 +209,12 @@ def run(args, spark=None) -> dict:
     )
     if not stage_done:
         t0 = time.time()
-        raw.withColumn("bucket", bucket_of(F.col("conv_id"), args.buckets)).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(staging)
-        n_staged = spark.read.parquet(staging).count()  # footer metadata only
+        # the staged row count rides the staging write (no read-back job)
+        sobs = Observation()
+        raw.withColumn("bucket", bucket_of(F.col("conv_id"), args.buckets)).observe(
+            sobs, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        n_staged = int(sobs.get["n"])
         log.commit(
             run_id=args.run_id,
             stage="stage_source",
@@ -470,6 +476,15 @@ def run(args, spark=None) -> dict:
             rows_out, lo, hi, checksum = read_audit(obs)
             if rows_obs is not None:
                 rows_in = int(rows_obs.get["rows_in"] or 0)
+            if rows_out:
+                # manifest bounds let retention skip files it cannot expire
+                tier_files = with_bounds(tier_files, *audit_bounds(obs))
+            else:
+                # an empty bucket commits no file, as in the global
+                # scheduler's partitionBy write (Spark still writes one
+                # empty file here, which would be an unbounded entry)
+                catalog.discard_data_files(f"rollup_{tier}", tier_files)
+                tier_files = []
             prev_paths = [f["path"] for f in tier_files]
             with commit_lock:
                 catalog.commit_overwrite_partitions(
@@ -670,6 +685,8 @@ def run(args, spark=None) -> dict:
                         F.count(F.lit(1)).alias("n"),
                         F.min("bucket_start").alias("lo"),
                         F.max("bucket_start").alias("hi"),
+                        F.unix_micros(F.min("bucket_start")).alias("lo_us"),
+                        F.unix_micros(F.max("bucket_start")).alias("hi_us"),
                         F.sum(
                             F.xxhash64(
                                 "conv_id", "bucket_start", "cnt", "sum_tokens"
@@ -685,10 +702,16 @@ def run(args, spark=None) -> dict:
                         for b in todo
                     }
                 for b in todo:
-                    catalog.commit_overwrite_partitions(
-                        f"rollup_{tier}", tier_files.get(b, []), {"bucket": b}
-                    )
                     r = audit_rows.get(b)
+                    catalog.commit_overwrite_partitions(
+                        f"rollup_{tier}",
+                        with_bounds(
+                            tier_files.get(b, []),
+                            r["lo_us"] if r is not None else None,
+                            r["hi_us"] if r is not None else None,
+                        ),
+                        {"bucket": b},
+                    )
                     rows_out = int(r["n"]) if r is not None else 0
                     lineage_by_bucket[b].append(
                         (

@@ -3,15 +3,22 @@ resume-after-kill == uninterrupted run; FIXTURES F5)."""
 
 import argparse
 import datetime as dt
+import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from biomed_timeseries_preprocessing_spark.operators.derive import with_derived
 from biomed_timeseries_preprocessing_spark.operators.retention import apply_retention
 from biomed_timeseries_preprocessing_spark.operators.rollup import rollup_from_turns
 from biomed_timeseries_preprocessing_spark.plans.skew import rollup_from_turns_salted
-from biomed_timeseries_preprocessing_spark.sources.catalog import LocalSnapshotCatalog
+from biomed_timeseries_preprocessing_spark.sources.catalog import (
+    LocalSnapshotCatalog,
+    with_bounds,
+)
 from jobs.rollup_job import run as run_job
 
 
@@ -212,6 +219,12 @@ def test_global_scheduler_bit_identical(spark, tmp_path):
     assert stats_g["buckets_run"] == stats_p["buckets_run"] == 8
     assert stats_g["rows_out"] == stats_p["rows_out"]
     cat_g, cat_p = LocalSnapshotCatalog(wh_g), LocalSnapshotCatalog(wh_p)
+    # both schedulers stamp every tier file with bounds (empty buckets
+    # commit no file), so retention can skip files without reading them
+    for cat in (cat_g, cat_p):
+        for tier in ("1m", "5m", "1h", "1d"):
+            files = cat.current_files(f"rollup_{tier}")
+            assert files and all(f["lower"] <= f["upper"] for f in files)
     for tier in ("1m", "5m", "1h", "1d"):
         a = read_sorted(cat_g, spark, f"rollup_{tier}")
         b = read_sorted(cat_p, spark, f"rollup_{tier}")
@@ -312,3 +325,116 @@ def test_resume_under_changed_bucket_modulus_reruns_everything(spark, tmp_path):
         a = read_sorted(cat_a, spark, f"rollup_{tier}")
         b = read_sorted(cat_b, spark, f"rollup_{tier}")
         pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+def test_rerun_after_retention_equals_fresh_run(spark, tmp_path):
+    """A nightly re-run (new run id, same warehouse) after a retention
+    pass must give every tier bit-identical to a fresh run: the
+    retention rewrite keeps each file's {"bucket": b} partition, so the
+    re-run's partition overwrites replace the rewritten files instead of
+    stacking duplicate rows on top of them."""
+    wh_a, wh_b = str(tmp_path / "a"), str(tmp_path / "b")
+    run_job(job_args(warehouse=wh_a, run_id="fresh"), spark=spark)
+    run_job(job_args(warehouse=wh_b, run_id="night-1"), spark=spark)
+
+    cat_b = LocalSnapshotCatalog(wh_b)
+    src = cat_b.current_files("rollup_1m")
+    bucket_of_conv = {
+        c: f["partition"]["bucket"]
+        for f in src
+        for c in pq.read_table(f["path"], columns=["conv_id"])["conv_id"].to_pylist()
+    }
+    ts = cat_b.read(spark, "rollup_1m").toPandas()["bucket_start"]
+    mid = (ts.min() + (ts.max() - ts.min()) / 2).to_pydatetime()
+    removed = apply_retention(cat_b, spark, mid + dt.timedelta(days=7))
+    assert removed["1m"] > 0
+
+    old_paths = {f["path"] for f in src}
+    rewritten = [f for f in cat_b.current_files("rollup_1m") if f["path"] not in old_paths]
+    assert rewritten
+    for f in rewritten:  # each file keeps its source partition
+        convs = set(pq.read_table(f["path"], columns=["conv_id"])["conv_id"].to_pylist())
+        assert set(f["partition"]) == {"bucket"}
+        assert {bucket_of_conv[c] for c in convs} == {f["partition"]["bucket"]}
+
+    run_job(job_args(warehouse=wh_b, run_id="night-2"), spark=spark)
+    cat_a = LocalSnapshotCatalog(wh_a)
+    for tier in ("1m", "5m", "1h", "1d"):
+        pd.testing.assert_frame_equal(
+            read_sorted(cat_a, spark, f"rollup_{tier}"),
+            read_sorted(cat_b, spark, f"rollup_{tier}"),
+            check_exact=True,
+        )
+
+
+def _next_job_id(spark) -> int:
+    """First Spark job id not yet started (after the listener bus drains)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None), default=-1) + 1
+
+
+def _table_files(cat, table) -> set[str]:
+    return {
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(os.path.join(cat.warehouse, table))
+        for n in names
+    }
+
+
+def test_retention_job_counts_from_manifest_bounds(spark, tmp_path):
+    """Retention reads manifest bounds before touching data: a tier whose
+    bounds all lie at or after the cutoff runs no Spark job and commits
+    nothing; an expiring tier is rewritten by exactly one job; a rewrite
+    that removes nothing commits nothing and leaves no files behind."""
+    cat = LocalSnapshotCatalog(str(tmp_path / "wh"))
+    t0 = dt.datetime(2026, 1, 10)
+    cutoff = t0 + dt.timedelta(days=5)
+    now = cutoff + dt.timedelta(days=7)
+
+    def frame(conv, days):
+        return spark.createDataFrame(
+            [(conv, t0 + dt.timedelta(days=d), 1) for d in days],
+            "conv_id string, bucket_start timestamp, cnt long",
+        )
+
+    def commit(table, df, bucket, bounded=True):
+        files = cat.write_data_files(table, df, {"bucket": bucket})
+        if bounded:
+            lo, hi = df.select(
+                F.unix_micros(F.min("bucket_start")), F.unix_micros(F.max("bucket_start"))
+            ).first()
+            files = with_bounds(files, lo, hi)
+        cat.commit_overwrite_partitions(table, files, {"bucket": bucket})
+
+    commit("rollup_5m", frame("a", [5, 6]), 0)  # lower == cutoff: kept whole
+    commit("rollup_5m", frame("b", [8, 9]), 1)
+    commit("rollup_1m", frame("a", [1, 5, 6]), 0)  # spans the cutoff
+    commit("rollup_1m", frame("b", [2, 3]), 1)  # wholly expired
+    commit("rollup_1m", frame("c", [7, 8]), 2)  # after the cutoff
+    commit("rollup_1h", frame("a", [6, 7]), 0, bounded=False)
+
+    horizon = {"1m": 7 * 86400, "5m": 7 * 86400, "1h": 7 * 86400}
+
+    def one_tier(tier):
+        snaps = len(cat.snapshots(f"rollup_{tier}"))
+        j0 = _next_job_id(spark)
+        removed = apply_retention(cat, spark, now, retention={tier: horizon[tier]})
+        return removed[tier], _next_job_id(spark) - j0, len(cat.snapshots(f"rollup_{tier}")) - snaps
+
+    assert one_tier("5m") == (0, 0, 0)
+
+    before = cat.current_files("rollup_1m")
+    assert one_tier("1m") == (3, 1, 1)
+    after = cat.current_files("rollup_1m")
+    kept = {f["path"] for f in before if f["partition"] == {"bucket": 2}}
+    assert kept <= {f["path"] for f in after}  # the bounded-after file untouched
+    assert cat.read(spark, "rollup_1m").count() == 4
+    for f in after:  # partitions kept, bounds no tighter than the cutoff
+        convs = set(pq.read_table(f["path"], columns=["conv_id"])["conv_id"].to_pylist())
+        assert convs <= {"abc"[f["partition"]["bucket"]]}
+        assert f["lower"] >= TimestampType().toInternal(cutoff)
+
+    files = _table_files(cat, "rollup_1h")
+    assert one_tier("1h") == (0, 1, 0)  # unbounded file: scanned, nothing removed
+    assert _table_files(cat, "rollup_1h") == files
