@@ -186,63 +186,43 @@ def test_staging_prunes_per_bucket_scan(spark, tmp_path):
 
 def test_bucket_parallelism_bit_identical(spark, tmp_path):
     """Concurrent bucket pipelines (thread pool + locked commits) must
-    produce byte-identical tiers and the same lineage cardinality as the
-    sequential path."""
+    produce byte-identical tiers, codec blobs and lineage content as the
+    sequential path — with gapfill + codec on, and with empty buckets in
+    play (6 convs over 8 buckets)."""
     wh_s, wh_p = str(tmp_path / "seq"), str(tmp_path / "par")
-    run_job(job_args(warehouse=wh_s, run_id="rp", bucket_parallelism=1), spark=spark)
-    stats = run_job(job_args(warehouse=wh_p, run_id="rp", bucket_parallelism=4), spark=spark)
-    assert stats["buckets_run"] == 4
+    base = dict(run_id="rp", buckets=8, gapfill=True, codec_chunks=True)
+    stats_s = run_job(job_args(warehouse=wh_s, bucket_parallelism=1, **base), spark=spark)
+    stats_p = run_job(job_args(warehouse=wh_p, bucket_parallelism=4, **base), spark=spark)
+    assert stats_s["buckets_run"] == stats_p["buckets_run"] == 8
+    assert stats_s["rows_out"] == stats_p["rows_out"]
     cat_s, cat_p = LocalSnapshotCatalog(wh_s), LocalSnapshotCatalog(wh_p)
-    for tier in ("1m", "5m", "1h", "1d"):
-        a = read_sorted(cat_s, spark, f"rollup_{tier}")
-        b = read_sorted(cat_p, spark, f"rollup_{tier}")
-        pd.testing.assert_frame_equal(a, b, check_exact=True)
-    lin = cat_p.read(spark, "lineage").toPandas()
-    per = lin.groupby(["stage", "partition_key"]).size()
-    assert (per == 1).all() and len(per) == 4 * 4 + 1
-
-
-def test_global_scheduler_bit_identical(spark, tmp_path):
-    """The default global scheduler (one partitioned job per stage,
-    per-bucket manifest slicing) must produce byte-identical tier tables
-    and the same per-(stage, bucket) lineage cardinality as the
-    per-bucket thread-pool scheduler — including with gapfill + codec
-    on, and with an empty bucket in play (6 convs over 8 buckets)."""
-    wh_g, wh_p = str(tmp_path / "glob"), str(tmp_path / "perb")
-    base = job_args(run_id="sched", buckets=8, gapfill=True, codec_chunks=True)
-    g = argparse.Namespace(**{**vars(base), "warehouse": wh_g, "scheduler": "global"})
-    p = argparse.Namespace(
-        **{**vars(base), "warehouse": wh_p, "scheduler": "per-bucket"}
-    )
-    stats_g = run_job(g, spark=spark)
-    stats_p = run_job(p, spark=spark)
-    assert stats_g["buckets_run"] == stats_p["buckets_run"] == 8
-    assert stats_g["rows_out"] == stats_p["rows_out"]
-    cat_g, cat_p = LocalSnapshotCatalog(wh_g), LocalSnapshotCatalog(wh_p)
-    # both schedulers stamp every tier file with bounds (empty buckets
-    # commit no file), so retention can skip files without reading them
-    for cat in (cat_g, cat_p):
+    # every tier file is stamped with bounds (empty buckets commit no
+    # file), so retention can skip files without reading them
+    for cat in (cat_s, cat_p):
         for tier in ("1m", "5m", "1h", "1d"):
             files = cat.current_files(f"rollup_{tier}")
             assert files and all(f["lower"] <= f["upper"] for f in files)
     for tier in ("1m", "5m", "1h", "1d"):
-        a = read_sorted(cat_g, spark, f"rollup_{tier}")
+        a = read_sorted(cat_s, spark, f"rollup_{tier}")
         b = read_sorted(cat_p, spark, f"rollup_{tier}")
         pd.testing.assert_frame_equal(a, b, check_exact=True)
-    lin_g = cat_g.read(spark, "lineage").toPandas()
+    lin_s = cat_s.read(spark, "lineage").toPandas()
     lin_p = cat_p.read(spark, "lineage").toPandas()
+    per = lin_p.groupby(["stage", "partition_key"]).size()
+    # gapfill + codec_chunks + 4 tiers per bucket, plus stage_source
+    assert (per == 1).all() and len(per) == 6 * 8 + 1
     key = ["stage", "partition_key", "rows_in", "rows_out", "checksum"]
     pd.testing.assert_frame_equal(
-        lin_g[key].sort_values(key).reset_index(drop=True),
+        lin_s[key].sort_values(key).reset_index(drop=True),
         lin_p[key].sort_values(key).reset_index(drop=True),
         check_exact=True,
     )
     # codec table identical blob-for-blob
-    cg = cat_g.read(spark, "codec_chunks").toPandas().sort_values(
+    cs = cat_s.read(spark, "codec_chunks").toPandas().sort_values(
         ["conv_id", "chunk_start"]).reset_index(drop=True)
     cp = cat_p.read(spark, "codec_chunks").toPandas().sort_values(
         ["conv_id", "chunk_start"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(cg[sorted(cg.columns)], cp[sorted(cp.columns)])
+    pd.testing.assert_frame_equal(cs[sorted(cs.columns)], cp[sorted(cp.columns)])
 
 
 def test_two_phase_overwrite_invisible_until_commit(spark, tmp_path):

@@ -40,23 +40,6 @@ def test_compare_fails_on_negative_zero_like_the_driver_hash():
     assert compare("same", spark_pdf, spark_pdf.copy()) == []
 
 
-def test_resolve_scheduler_auto_follows_deployment_shape():
-    # VERDICT r4 #4: the scheduler flips itself — per-bucket thread pool
-    # on a single JVM, one partitioned job per stage on a wide cluster
-    from jobs.rollup_job import resolve_scheduler
-
-    assert resolve_scheduler("local[32]") == "per-bucket"
-    assert resolve_scheduler("local[*]") == "per-bucket"
-    assert resolve_scheduler("local") == "per-bucket"
-    assert resolve_scheduler("yarn") == "global"
-    assert resolve_scheduler("spark://host:7077") == "global"
-    assert resolve_scheduler("k8s://https://host:443") == "global"
-    assert resolve_scheduler("local-cluster[2,2,1024]") == "global"
-    # explicit choice always wins over the heuristic
-    assert resolve_scheduler("yarn", "per-bucket") == "per-bucket"
-    assert resolve_scheduler("local[8]", "global") == "global"
-
-
 def test_parse_local_cores_cluster_masters_are_unpinned():
     # ADVICE r4: per-core configs (default.parallelism, graft.cores) must
     # only be pinned when the core count is actually known
